@@ -33,23 +33,29 @@ clusters) are cross-query shared on purpose, mirroring the staged
 tables a production pipeline would materialize. All rows cached are
 slim projections (ids + hashes, never document text or embeddings), so
 the resident set is O(corpus keys), and MEMORY_AND_DISK spills rather
-than evicting or OOMing. Timing harnesses own cache hygiene instead:
-``bench.py`` clears the Spark cache between repetitions of multi-rep
-queries so medians measure cold plans, not CacheManager reuse
-(ADVICE r6), and tests build per-fixture sessions.
+than evicting or OOMing. Cache hygiene has one owner:
+``session.evict_caches`` drops every cached relation together with the
+(session, corpus) memo (``session.memo``) that hands the memoized ones
+out, and timing harnesses (``bench.py``, ``perfbench/``,
+``tools/scale_probe.py``) call it between passes so medians measure
+cold plans, not CacheManager reuse (ADVICE r6).
 """
 
 from __future__ import annotations
 
+import functools
+from fractions import Fraction
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
+from ..session import memo
 
 # Deterministic MinHash: k independent permutations h_i(x) = (a_i*x + b_i) mod p
 # over token hashes reduced into [0, p). Seeds fixed so every run/engine sees
@@ -235,21 +241,41 @@ def minhash_banded(sigs: DataFrame) -> DataFrame:
             for band in range(_N_BANDS)
         ],
     )
-    bk_cols = [f"bk_{band}" for band in range(_N_BANDS)]
-    bands = []
-    for band in range(_N_BANDS):
-        bands.append(
-            keyed.select(
-                "doc_id",
-                *bk_cols,
-                F.lit(band).alias("band_id"),
-                F.col(f"bk_{band}").alias("band_key"),
-            )
+    return _band_table(keyed, [f"bk_{band}" for band in range(_N_BANDS)])
+
+
+def _band_table(keyed: DataFrame, key_cols: list[str]) -> DataFrame:
+    """One row per (doc, band) from a one-row-per-doc ``keyed`` table:
+    (doc_id, *key_cols, band_id, band_key), band j's key being
+    key_cols[j]. Every row carries ALL band keys so the band self-join
+    can apply _first_collision_band map-side. Shared by MinHash and
+    SimHash."""
+    bands = [
+        keyed.select(
+            "doc_id",
+            *key_cols,
+            F.lit(band).alias("band_id"),
+            F.col(key).alias("band_key"),
         )
-    banded = bands[0]
-    for b in bands[1:]:
-        banded = banded.unionByName(b)
-    return banded
+        for band, key in enumerate(key_cols)
+    ]
+    return functools.reduce(DataFrame.unionByName, bands)
+
+
+def _first_collision_band(key_cols: list[str]) -> Column:
+    """Predicate over a band self-join's (band_id, {key}_a, {key}_b)
+    rows: true iff the row's band is the pair's FIRST colliding band —
+    band j survives iff no band j′ < j has equal keys — so each pair is
+    emitted exactly once without a dropDuplicates shuffle. Collision is
+    defined by band-key equality, the same proxy the join itself uses,
+    so the emitted pair set is bit-identical to the dedup form."""
+    first = None
+    for band in range(len(key_cols)):
+        cond = F.col("band_id") == band
+        for prev in key_cols[:band]:
+            cond = cond & (F.col(f"{prev}_a") != F.col(f"{prev}_b"))
+        first = cond if first is None else (first | cond)
+    return first
 
 
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -277,8 +303,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc per band, still far from the 32-element signature arrays
     (~2 KB/doc), which are re-attached to the SURVIVING candidate
     pairs afterwards via two doc_id equi-joins, the same
-    slim-then-rejoin pattern as prefix_filtered_jaccard_join's
-    verification step.
+    slim-then-rejoin pattern as the exact joins' _with_word_sets.
 
     Hot-cell salting (r16, VERDICT r15 item 2): the band self-join
     routes through similarity.salted_half_pairs with cell key
@@ -298,7 +323,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # PERSIST the signature table: it feeds 8 band projections, BOTH
     # sides of the bucket self-join, and the two signature re-attach
     # joins — and the higher-order-lambda minhash lineage defeats
-    # Spark's exchange reuse (see prefix_filtered_jaccard_join), so
+    # Spark's exchange reuse (see jaccard_join_stages), so
     # unpersisted the corpus is re-tokenized and re-permuted ~18×.
     # 32 longs + doc_id ≈ 260 B/doc; a production pipeline stages this
     # exact table to storage. MEMORY_AND_DISK: spill, don't OOM.
@@ -324,24 +349,15 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count instead of a data-scaled broadcast (ADVICE r15).
     from .similarity import salted_half_pairs
 
-    bk_carry = tuple(bk_cols)
     half = salted_half_pairs(
         banded,
         id_col="doc_id",
         cell_cols=("band_id", "band_key"),
-        carry_cols=bk_carry,
+        carry_cols=tuple(bk_cols),
         broadcast=False,
     )
-    first_band = None
-    for band in range(_N_BANDS):
-        cond = (F.col("band_id") == band)
-        for prev in range(band):
-            cond = cond & (
-                F.col(f"bk_{prev}_a") != F.col(f"bk_{prev}_b")
-            )
-        first_band = cond if first_band is None else (first_band | cond)
     pairs = (
-        half.filter(first_band)
+        half.filter(_first_collision_band(bk_cols))
         .select(
             F.col("doc_id").alias("doc_a"),
             F.col("nn_id").alias("doc_b"),
@@ -471,7 +487,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     join and no quadratic per-block term keyed on a skewable attribute.
     Since r14 the PPJoin POSITIONAL filter prunes matched rows whose
     token ranks already cap the overlap below the threshold (see
-    prefix_filtered_jaccard_join) — still lossless, fewer candidates
+    jaccard_join_stages) — still lossless, fewer candidates
     into the dedup shuffle. Exact Jaccard verifies survivors via JVM
     higher-order set ops.
 
@@ -484,59 +500,57 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(spark, sf_dir)
 
 
-# Verified-pairs memo: q_dedup_ngram_jaccard AND q_dedup_clusters both
-# need the full prefix-filtered pair join — by far the most expensive
-# sub-plan in the dedup family (~95% of q_dedup_clusters' runtime was a
-# recompute of it, VERDICT r4 item 2). A real pipeline stages
-# pairs → clusters through a materialized intermediate; the in-session
-# analog is one persisted DataFrame per (session, corpus, threshold),
-# computed on first use. MEMORY_AND_DISK: pair volume is Ω(true dups),
-# which can exceed executor memory on an adversarial corpus — spill,
-# don't OOM. Keyed on the session OBJECT (identity-checked) so a stale
-# entry from a stopped session can never be served to a new one.
-_PAIR_CACHE: dict[tuple[int, str], tuple[SparkSession, DataFrame]] = {}
-
-
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, jaccard) for every pair with Jaccard ≥ _JACCARD_T —
     prefix-filtered exact similarity join (see q_dedup_ngram_jaccard),
     persisted per (session, corpus) so the pairs→clusters stage chain
-    computes it once."""
-    import os
+    computes it once.
 
+    q_dedup_ngram_jaccard AND q_dedup_clusters both need the full
+    prefix-filtered pair join — by far the most expensive sub-plan in
+    the dedup family (~95% of q_dedup_clusters' runtime was a recompute
+    of it, VERDICT r4 item 2). A real pipeline stages pairs → clusters
+    through a materialized intermediate; the in-session analog is one
+    persisted DataFrame per (session, corpus) in ``session.memo``.
+    MEMORY_AND_DISK: pair volume is Ω(true dups), which can exceed
+    executor memory on an adversarial corpus — spill, don't OOM."""
     from pyspark import StorageLevel
 
-    key = (id(spark), os.path.abspath(sf_dir))
-    hit = _PAIR_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    d = load_table(spark, sf_dir, "documents")
-    pairs = prefix_filtered_jaccard_join(d).persist(
-        StorageLevel.MEMORY_AND_DISK
+    return memo(
+        "ngram_jaccard_pairs",
+        spark,
+        sf_dir,
+        lambda: prefix_filtered_jaccard_join(
+            load_table(spark, sf_dir, "documents")
+        ).persist(StorageLevel.MEMORY_AND_DISK),
     )
-    _PAIR_CACHE[key] = (spark, pairs)
-    return pairs
 
 
-def prefix_filtered_jaccard_join(
-    docs: DataFrame, threshold: float = _JACCARD_T
-) -> DataFrame:
-    """Core prefix-filter join over any (doc_id, text) DataFrame —
-    separated from the fixture loader so property tests can drive it
-    with adversarial corpora. ``threshold`` must be a short decimal
-    (0.5, 0.95, …): the prefix length uses its exact rational form in
-    integer arithmetic, because ``ceil(t·n)`` in floating point can land
-    one ulp high (0.95×20 → 19.000000000000004 → ceil 20) and silently
-    drop the last prefix token — turning a lossless filter lossy."""
-    from fractions import Fraction
+def _prefix_core(docs: DataFrame, threshold: float):
+    """The frequency-ordered prefix build both exact set-similarity
+    joins share: ``(t, tok, ordered, p)`` over any (doc_id, text)
+    DataFrame.
 
+    - ``t``: the threshold's exact rational form. ``threshold`` must be
+      a short decimal (0.5, 0.9, 0.95, …): ``ceil(t·n)`` in floating
+      point can land one ulp high (0.95×20 → 19.000000000000004 → ceil
+      20) and silently drop the last prefix token — turning a lossless
+      filter lossy — so every bound below runs in integer arithmetic.
+    - ``tok``: (doc_id, words), each doc's distinct tokens.
+    - ``ordered``: (doc_id, wf), each doc's tokens as (freq, token)
+      structs sorted by the global (ascending document frequency,
+      token) order — rarest first.
+    - ``p``: the prefix length |s| − ⌈t·|s|⌉ + 1 over ``wf``.
+
+    Nothing is persisted here: each join persists the relation its own
+    plan reads twice (jaccard: the exploded prefixes; containment:
+    ``ordered``)."""
     t = Fraction(str(threshold))
     tok = docs.select(
         "doc_id", F.array_distinct(F.split("text", " ")).alias("words")
     )
     words_ex = tok.select("doc_id", F.explode("words").alias("token"))
     freq = words_ex.groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
-    # rebuild each doc's tokens sorted by the global (freq, token) order.
     # freq is UNHINTED on purpose (VERDICT r5 item 2): a word-frequency
     # table over a web-scale corpus is vocabulary-sized — Heaps' law puts
     # it in the billions of rows at 100 TB (URLs, typos, hapax legomena)
@@ -561,7 +575,45 @@ def prefix_filtered_jaccard_join(
         (n * F.lit(t.numerator) + F.lit(t.denominator - 1))
         / F.lit(t.denominator)
     )
-    p = (n - ceil_tn + 1).cast("int")
+    return t, tok, ordered, (n - ceil_tn + 1).cast("int")
+
+
+def _with_word_sets(cand: DataFrame, tok: DataFrame) -> DataFrame:
+    """Re-attach both sides' word arrays and sizes (wa/na, wb/nb) to
+    (doc_a, doc_b) candidates — the verify legs of both exact joins.
+    Word arrays shuffle by doc_id only for surviving candidates (the
+    slim-then-rejoin pattern)."""
+    a = tok.select(
+        F.col("doc_id").alias("doc_a"),
+        F.col("words").alias("wa"),
+        F.size("words").alias("na"),
+    )
+    b = tok.select(
+        F.col("doc_id").alias("doc_b"),
+        F.col("words").alias("wb"),
+        F.size("words").alias("nb"),
+    )
+    return cand.join(a, "doc_a").join(b, "doc_b")
+
+
+def prefix_filtered_jaccard_join(
+    docs: DataFrame, threshold: float = _JACCARD_T
+) -> DataFrame:
+    """Core prefix-filter join over any (doc_id, text) DataFrame —
+    separated from the fixture loader so property tests can drive it
+    with adversarial corpora. ``threshold`` must be a short decimal
+    (see _prefix_core)."""
+    return jaccard_join_stages(docs, threshold)[2]
+
+
+def jaccard_join_stages(
+    docs: DataFrame, threshold: float = _JACCARD_T
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(prefixes, candidates, pairs): the cumulative sub-plans of
+    prefix_filtered_jaccard_join, which returns the last one.
+    ``prefixes`` is persisted; tools/jaccard_breakdown.py times each
+    stage of this exact plan."""
+    t, tok, ordered, p = _prefix_core(docs, threshold)
     # PERSIST the prefix relation: it feeds BOTH sides of the self-join
     # below, and Spark cannot deduplicate the two subtrees itself — the
     # higher-order lambdas (array_sort/transform) defeat plan
@@ -643,20 +695,9 @@ def prefix_filtered_jaccard_join(
     #   inter/(na+nb−inter) ≥ num/den  ⟺  inter·(den+num) ≥ num·(na+nb)
     # (denominator positive), so no float rounding can flip a boundary
     # pair vs the oracle; the float division only runs for survivors.
-    a = tok.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("words").alias("wa"),
-        F.size("words").alias("na"),
-    )
-    b = tok.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("words").alias("wb"),
-        F.size("words").alias("nb"),
-    )
     inter = F.size(F.array_intersect("wa", "wb"))
     survivors = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
+        _with_word_sets(cand, tok)
         .select("doc_a", "doc_b", "na", "nb", inter.alias("inter"))
         .filter(
             F.col("inter") * F.lit(t.denominator + t.numerator)
@@ -666,9 +707,10 @@ def prefix_filtered_jaccard_join(
     jac = F.col("inter").cast("double") / (
         F.col("na") + F.col("nb") - F.col("inter")
     )
-    return survivors.select(
+    pairs = survivors.select(
         "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
     )
+    return prefixes, cand, pairs
 
 
 _CONTAIN_T = 0.9  # overlap-coefficient threshold (short decimal — see below)
@@ -719,39 +761,15 @@ def prefix_filtered_containment_join(
     (doc_id, text) DataFrame — property-testable on adversarial
     corpora. ``threshold`` must be a short decimal: prefix length and
     the acceptance test both use its exact rational form (see
-    prefix_filtered_jaccard_join on why float ceil is lossy)."""
-    from fractions import Fraction
-
-    t = Fraction(str(threshold))
-    tok = docs.select(
-        "doc_id", F.array_distinct(F.split("text", " ")).alias("words")
-    )
-    words_ex = tok.select("doc_id", F.explode("words").alias("token"))
-    freq = words_ex.groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
-    # freq deliberately UNHINTED — vocabulary-sized at 100 TB; see the
-    # matching note in prefix_filtered_jaccard_join (VERDICT r5 item 2)
-    ordered = (
-        words_ex.join(freq, "token")
-        .groupBy("doc_id")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("freq", "token"))).alias(
-                "wf"
-            )
-        )
-    )
-    n = F.size("wf")
-    ceil_tn = F.floor(
-        (n * F.lit(t.numerator) + F.lit(t.denominator - 1))
-        / F.lit(t.denominator)
-    )
-    p = (n - ceil_tn + 1).cast("int")
+    _prefix_core on why float ceil is lossy)."""
+    t, tok, ordered, p = _prefix_core(docs, threshold)
     # PERSIST the frequency-ordered per-doc token relation: both the
     # probe (prefixes) and index (postings) sides below derive from it,
     # and the lambda-bearing lineage defeats Spark's exchange reuse
-    # (see the matching note in prefix_filtered_jaccard_join), so
-    # without the persist the tokenize + freq aggregate + per-doc sort
-    # chain executes twice. MEMORY_AND_DISK: one row per doc, spills
-    # rather than OOMs.
+    # (see the matching note in jaccard_join_stages), so without the
+    # persist the tokenize + freq aggregate + per-doc sort chain
+    # executes twice. MEMORY_AND_DISK: one row per doc, spills rather
+    # than OOMs.
     from pyspark import StorageLevel
 
     ordered = ordered.persist(StorageLevel.MEMORY_AND_DISK)
@@ -761,14 +779,14 @@ def prefix_filtered_containment_join(
     # directions produce the same unordered pair anyway).
     prefixes = ordered.select(
         "doc_id",
-        n.alias("nt"),
+        F.size("wf").alias("nt"),
         F.explode(
             F.slice(F.transform("wf", lambda s: s["token"]), F.lit(1), p)
         ).alias("token"),
     )
     postings = ordered.select(
         "doc_id",
-        n.alias("nt"),
+        F.size("wf").alias("nt"),
         F.explode(F.transform("wf", lambda s: s["token"])).alias("token"),
     )
     cand = (
@@ -790,21 +808,10 @@ def prefix_filtered_containment_join(
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    a = tok.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("words").alias("wa"),
-        F.size("words").alias("na"),
-    )
-    b = tok.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("words").alias("wb"),
-        F.size("words").alias("nb"),
-    )
     inter = F.size(F.array_intersect("wa", "wb"))
     mn = F.least("na", "nb")
     survivors = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
+        _with_word_sets(cand, tok)
         .select("doc_a", "doc_b", mn.alias("mn"), inter.alias("inter"))
         .filter(
             F.col("inter") * F.lit(t.denominator)
@@ -1395,21 +1402,7 @@ def simhash_banded(sigs: DataFrame) -> DataFrame:
     word itself. Factored out of simhash_band_pairs (r16) so the
     salting tests and the band-space candidate audit build the EXACT
     production cell space instead of re-deriving it."""
-    sig_cols = [f"sh{j}" for j in range(_SIMHASH_BANDS)]
-    bands = []
-    for j in range(_SIMHASH_BANDS):
-        bands.append(
-            sigs.select(
-                "doc_id",
-                *sig_cols,
-                F.lit(j).alias("band_id"),
-                F.col(f"sh{j}").alias("band_key"),
-            )
-        )
-    banded = bands[0]
-    for b in bands[1:]:
-        banded = banded.unionByName(b)
-    return banded
+    return _band_table(sigs, [f"sh{j}" for j in range(_SIMHASH_BANDS)])
 
 
 def simhash_band_pairs(
@@ -1482,24 +1475,17 @@ def simhash_band_pairs(
         ),
         start=F.lit(0),
     )
-    # Emit each pair from its FIRST colliding band only: band j
-    # survives iff no band j' < j already matched. A hamming-0 pair
-    # collides in all 4 bands, and on a self-similar corpus most true
-    # pairs ARE hamming-0 — so the old dropDuplicates shuffled ~4×
-    # the output (39 M rows for 9.8 M pairs at sf0.1) just to throw
-    # 3/4 away. The banded rows already carry every band word for the
-    # hamming check, so this is a map-side filter replacing an entire
-    # exchange+dedup stage (r11; the same trick does not transfer to
-    # minhash_lsh_pairs, whose banded rows carry only the one hashed
-    # band key).
-    first_band = None
-    for j in range(_SIMHASH_BANDS):
-        cond = (F.col("band_id") == j)
-        for jp in range(j):
-            cond = cond & (F.col(f"sh{jp}_a") != F.col(f"sh{jp}_b"))
-        first_band = cond if first_band is None else (first_band | cond)
+    # Emit each pair from its FIRST colliding band only
+    # (_first_collision_band). A hamming-0 pair collides in all 4
+    # bands, and on a self-similar corpus most true pairs ARE hamming-0
+    # — so the old dropDuplicates shuffled ~4× the output (39 M rows
+    # for 9.8 M pairs at sf0.1) just to throw 3/4 away. The banded rows
+    # already carry every band word for the hamming check, so this is a
+    # map-side filter replacing an entire exchange+dedup stage (r11).
     return (
-        half.filter(first_band & (hamming <= _HAMMING_MAX))
+        half.filter(
+            _first_collision_band(sig_cols) & (hamming <= _HAMMING_MAX)
+        )
         .select(
             F.col("doc_id").alias("doc_a"),
             F.col("nn_id").alias("doc_b"),
@@ -2106,9 +2092,8 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum (tests/test_northstar.py re-checks on the current fixture).
     """
     from .similarity import (
-        _matmul_routing_enabled,
+        _md5_sample,
         _route_cells_matmul,
-        _sq_dist,
         cosine,
         ivf_cells_for,
     )
@@ -2123,31 +2108,13 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # clusters stay executor-sized". Footer count keeps construction
     # lazy.
     k_cells = ivf_cells_for(table_rows(spark, sf_dir, "embeddings"))
-    centroids = (
-        v.withColumn("h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(k_cells)
-        .select(F.col("vec_id").alias("cell"), F.col("emb").alias("centroid"))
-    )
-    if _matmul_routing_enabled(spark):
-        # same Arrow-matmul route as q_sim_ivf (default ON since r6;
-        # equality vs the fold test-pinned in test_northstar.py)
-        assigned = _route_cells_matmul(v, centroids, 1).select(
-            "vec_id", "cell"
-        )
-    else:
-        dist = v.crossJoin(F.broadcast(centroids)).select(
-            "vec_id",
-            "cell",
-            _sq_dist(F.col("emb"), F.col("centroid")).alias("dist2"),
-        )
-        assigned = dist.groupBy("vec_id").agg(
-            F.min_by("cell", F.struct("dist2", "cell")).alias("cell")
-        )
+    centroids = _md5_sample(v, k_cells, "cell", "centroid")
+    # same Arrow-matmul route as q_sim_ivf
+    assigned = _route_cells_matmul(v, centroids, 1).select("vec_id", "cell")
     # PERSIST the assignment: it feeds BOTH sides of the within-cell
     # member self-join below, and its lineage is a full-corpus routing
-    # pass (Arrow UDF or 64-term folds) that Spark cannot deduplicate
-    # across the two sides (see prefix_filtered_jaccard_join on why
+    # pass (the Arrow-matmul UDF) that Spark cannot deduplicate
+    # across the two sides (see jaccard_join_stages on why
     # reuse never fires). 16 B/row — the cluster-assignment table a
     # production SemDeDup run writes to storage anyway.
     from pyspark import StorageLevel
@@ -2391,7 +2358,7 @@ def qgram_blocked_editdist_join(
     # here in r8 — this is now the shared subtree: it feeds BOTH sides
     # of the prefix self-join and the short-doc fallback, and the
     # lambda-bearing lineage defeats Spark's exchange reuse, see
-    # prefix_filtered_jaccard_join). covs/plen are computed exactly
+    # jaccard_join_stages). covs/plen are computed exactly
     # once per doc inside this one projection; only the sliced prefix
     # array + the fallback flag survive into the cache (gf and covs
     # are dropped — a few dozen longs per doc). MEMORY_AND_DISK:

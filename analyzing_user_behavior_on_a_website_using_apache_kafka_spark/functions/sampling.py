@@ -24,6 +24,7 @@ from pyspark.storagelevel import StorageLevel
 
 from ..catalog import load_table
 from ..registry import query
+from ..session import memo
 
 _SAMPLE_PCT = 20  # q_sample_hash keeps buckets 0..19
 _TRAIN_PCT = 80  # q_split_train_test: <80 train, <90 validation, rest test
@@ -317,15 +318,6 @@ def pack_token_stream(
 
 _STRAT_K = 40  # exact per-source sample size
 
-# (session, corpus) memo for the registered stratified-sample plan —
-# the plan owns two persisted relations (rates, thinned), so without
-# the memo every oracle-sweep / bench rep added two NEW
-# MEMORY_AND_DISK entries that lived until evict_caches and warm calls
-# recomputed instead of reusing (ADVICE r9).  Same discipline as
-# behavior._TS_PROFILE_CACHE; session.evict_caches clears it (the
-# _CACHE_OWNERSHIP contract in functions/dedup.py).
-_STRAT_CACHE: dict[tuple[int, str], tuple[SparkSession, DataFrame]] = {}
-
 
 @query(
     "q_sample_stratified",
@@ -361,22 +353,22 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected), and membership is hash-deterministic across runs,
     engines, and backfills like every sampler in this module.
 
-    Memoized per (session, corpus) — the plan owns two persisted
-    relations, and repeated sweeps must reuse them, not stack fresh
-    cache entries per call (ADVICE r9; see ``_STRAT_CACHE``).
+    Memoized per (session, corpus) (``session.memo``) — the plan owns
+    two persisted relations (rates, thinned), and without the memo every
+    oracle-sweep / bench rep added two NEW MEMORY_AND_DISK entries that
+    lived until evict_caches while warm calls recomputed instead of
+    reusing them (ADVICE r9).
     """
-    import os
-
-    key = (id(spark), os.path.abspath(sf_dir))
-    hit = _STRAT_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "text"
+    return memo(
+        "stratified_sample",
+        spark,
+        sf_dir,
+        lambda: stratified_sample(
+            load_table(spark, sf_dir, "documents").select(
+                "doc_id", "source", "text"
+            )
+        ),
     )
-    out = stratified_sample(d)
-    _STRAT_CACHE[key] = (spark, out)
-    return out
 
 
 def stratified_sample(d: DataFrame, k: int = _STRAT_K) -> DataFrame:
@@ -405,7 +397,7 @@ def stratified_sample(d: DataFrame, k: int = _STRAT_K) -> DataFrame:
     fine for the property tests' tiny constructed corpora, which is
     exactly who calls it directly.  Reuse across repeated calls lives
     one layer up: the registered ``q_sample_stratified`` memoizes the
-    whole plan per (session, corpus) in ``_STRAT_CACHE`` (ADVICE r9),
+    whole plan per (session, corpus) in ``session.memo`` (ADVICE r9),
     per the ``_CACHE_OWNERSHIP`` contract in ``functions/dedup.py``."""
     from pyspark.sql import Window as W
 

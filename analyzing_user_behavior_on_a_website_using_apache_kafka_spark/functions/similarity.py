@@ -864,22 +864,20 @@ def _sq_dist(a: Column, b: Column) -> Column:
     )
 
 
-def _matmul_routing_enabled(spark: SparkSession) -> bool:
-    """Gate for the vectorized centroid-routing path (default ON).
-
-    The scale probe (SCALE.md §Round-5 measured artifacts) found IVF's
-    per-(vector, centroid) 64-term fold is the similarity family's most
-    expensive linear pass — 5× the Arrow-matmul ANN path at 100×, and
-    the matmul route measured 3× faster end-to-end at the 100× probe.
-    It is equality-tested against the fold on the fixture
-    (tests/test_northstar.py) and has been the default since r6, when
-    q_sim_ivf / q_dedup_semantic rotated back into the driver-checked
-    window (VERDICT r5 item 4). Escape hatch back to the interpreted
-    fold: spark.aub.vectorRouting=fold."""
-    try:
-        return spark.conf.get("spark.aub.vectorRouting", "matmul") == "matmul"
-    except Exception:
-        return True
+def _md5_sample(v: DataFrame, k: int, id_as: str, emb_as: str) -> DataFrame:
+    """The k vectors of ``v`` (vec_id, emb) ranked first by
+    (md5(vec_id), vec_id), renamed to (id_as, emb_as) — the
+    deterministic corpus sample behind IVF's and SemDeDup's coarse
+    centroids and the PQ codebook (FAISS-style random-subset init;
+    the DuckDB oracles replay it as ``ORDER BY md5(...), vec_id
+    LIMIT k``). A global sort-LIMIT (TakeOrdered: per-partition top-k
+    + driver merge of k rows), NOT a global window."""
+    return (
+        v.withColumn("h", F.md5(F.col("vec_id").cast("string")))
+        .orderBy("h", "vec_id")
+        .limit(k)
+        .select(F.col("vec_id").alias(id_as), F.col("emb").alias(emb_as))
+    )
 
 
 def _route_cells_matmul(
@@ -891,15 +889,18 @@ def _route_cells_matmul(
 ) -> DataFrame:
     """(id, cell, crnk) — each vector's n_cells nearest centroids by
     (dist², cell id), computed as ONE (batch × dim) @ (dim × k) numpy
-    pass per Arrow batch instead of k interpreted 64-term folds per row.
+    pass per Arrow batch instead of k interpreted 64-term folds per row
+    (the fold was the similarity family's most expensive linear pass at
+    the 100× scale probe, SCALE.md §Round-5). The one centroid route of
+    q_sim_ivf and q_dedup_semantic.
 
     The k×dim centroid table is collect()ed into the UDF closure —
     k-bounded by construction (16 at fixture scale, ⌈√(n/8)⌉ under
     ivf_cells_for — ~18 MB of f64 even at 10¹⁰ vectors), the same
-    boundary class as the report model. Ties: distances are float64 and the measured
-    assignment/routing margins dominate reordering error by ≥9 orders
-    (see q_sim_ivf), so (dist², cell) ordering matches the fold path
-    bit-for-bit on decisions; equality is test-pinned."""
+    boundary class as the report model. Ties: distances are float64
+    and the measured assignment/routing margins dominate reordering
+    error by ≥9 orders (see q_sim_ivf), so (dist², cell) ordering
+    matches the oracle's SUM-over-dims replay on every decision."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import LongType
@@ -919,7 +920,7 @@ def _route_cells_matmul(
             return pd.Series([], dtype=object)
         x = np.vstack(emb.to_numpy())  # (n, dim)
         # (n, k) pairwise squared distances; explicit diff² sum keeps
-        # the arithmetic in the same well-margined regime as the fold
+        # the arithmetic in the oracle's well-margined SUM-over-dims regime
         d2 = ((x[:, None, :] - cmat[None, :, :]) ** 2).sum(axis=2)
         # stable argsort on dist2; cells[] is ascending, so ties break
         # to the LOWER cell id — the (dist2, cell) order both engines use
@@ -1006,9 +1007,10 @@ def q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     is what matters to the engine), with k CORPUS-ADAPTIVE since r14
     (ivf_cells_for: exactly 16 at every fixture scale, √(n/8) above —
     the rule that also bounds SemDeDup's within-cell quadratic). Every
-    vector joins its nearest centroid (broadcast k×dim table, map-side
-    `min_by` aggregate — no corpus window). Search: each probe scores
-    only its nprobe = ivf_nprobe_for(k) nearest cells' members —
+    vector joins its nearest centroid (one Arrow matmul per batch
+    against the collected k×dim table, _route_cells_matmul — no corpus
+    window). Search: each probe scores only its nprobe =
+    ivf_nprobe_for(k) nearest cells' members —
     candidate volume ≈ nprobe·n/k = n/√k, sub-linear; the candidate
     join is an equi join on cell id. At 100 TB the assignment is
     written as a partition column so a probe reads only its cells'
@@ -1023,8 +1025,8 @@ def q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     QUALITY is the one thing an exact replay cannot check.
 
     Float-margin (ADVICE r4 — mirrors the q_sim_ann LSH measurement):
-    the oracle's dist² is a GROUP BY SUM (unordered) vs Spark's
-    sequential 64-term fold, so cross-engine parity needs the decision
+    the oracle's dist² is a GROUP BY SUM (unordered) vs numpy's
+    64-term array sum, so cross-engine parity needs the decision
     margins to dominate summation-order error. Measured on the fixtures
     (tools-free numpy replay of the oracle): min rank-1→rank-2
     assignment gap 1.6e-5 (sf0.001) / 1.7e-4 (sf0.01); min
@@ -1043,57 +1045,18 @@ def q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from the parquet footer — construction stays lazy.
     k_cells = ivf_cells_for(table_rows(spark, sf_dir, "embeddings"))
     nprobe = ivf_nprobe_for(k_cells)
-    # deterministic sampled centroids: top k by md5(vec_id) —
-    # a global sort-LIMIT (TakeOrdered: per-partition top-k + driver
-    # merge of k rows), NOT a global window
-    centroids = (
-        v.withColumn("h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(k_cells)
-        .select(F.col("vec_id").alias("cell"), F.col("emb").alias("centroid"))
-    )
+    centroids = _md5_sample(v, k_cells, "cell", "centroid")
     probes = v.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("probe_id"), F.col("emb").alias("probe_emb")
     )
-    if _matmul_routing_enabled(spark):
-        # vectorized route: one Arrow matmul per batch for all k cells
-        assigned = _route_cells_matmul(v, centroids, 1).select(
-            "vec_id", "cell"
+    assigned = _route_cells_matmul(v, centroids, 1).select("vec_id", "cell")
+    probe_cells = (
+        _route_cells_matmul(
+            probes, centroids, nprobe, id_col="probe_id", emb_col="probe_emb"
         )
-        probe_cells = (
-            _route_cells_matmul(
-                probes, centroids, nprobe, id_col="probe_id",
-                emb_col="probe_emb",
-            )
-            .join(probes, "probe_id")
-            .select("probe_id", "probe_emb", "cell")
-        )
-    else:
-        # nearest-centroid assignment: broadcast the k×dim table, argmin
-        # by (dist², cell) via map-side-combinable min_by — no corpus
-        # window
-        dist = v.crossJoin(F.broadcast(centroids)).select(
-            "vec_id",
-            "cell",
-            _sq_dist(F.col("emb"), F.col("centroid")).alias("dist2"),
-        )
-        assigned = dist.groupBy("vec_id").agg(
-            F.min_by("cell", F.struct("dist2", "cell")).alias("cell")
-        )
-        # route each probe to its nprobe nearest cells (tiny cross:
-        # probes × k)
-        w_cell = W.partitionBy("probe_id").orderBy(
-            F.col("cdist").asc(), F.col("cell").asc()
-        )
-        probe_cells = (
-            probes.crossJoin(F.broadcast(centroids))
-            .withColumn(
-                "cdist", _sq_dist(F.col("probe_emb"), F.col("centroid"))
-            )
-            .withColumn("crnk", F.row_number().over(w_cell))
-            .filter(F.col("crnk") <= nprobe)
-            .select("probe_id", "probe_emb", "cell")
-        )
+        .join(probes, "probe_id")
+        .select("probe_id", "probe_emb", "cell")
+    )
     cands = (
         assigned.join(F.broadcast(probe_cells), "cell")
         .filter(F.col("vec_id") != F.col("probe_id"))
@@ -1131,12 +1094,7 @@ def _pq_subcodebook(v: DataFrame) -> DataFrame:
     """(m, k, csub): the per-sub-space codebook — the _PQ_KS md5-ranked
     sample vectors sliced into _PQ_M sub-vectors. O(M x KS) rows; always
     broadcast."""
-    samp = (
-        v.withColumn("h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(_PQ_KS)
-        .select(F.col("vec_id").alias("k"), F.col("emb").alias("cemb"))
-    )
+    samp = _md5_sample(v, _PQ_KS, "k", "cemb")
     cslices = F.transform(
         F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
         lambda m: F.slice("cemb", m * _PQ_SUB + 1, _PQ_SUB),

@@ -25,8 +25,6 @@ Scale notes (the 100 TB shape of each):
 
 from __future__ import annotations
 
-import os
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -34,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
+from ..session import memo
 
 _ORD = ("ts", "event_id")  # total order within a user: ts alone has dups
 
@@ -603,14 +602,6 @@ def q_event_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TS_PROBES = 20
 _TS_TOPK = 5
 
-# (session, corpus) -> persisted O(users × 24) activity-profile relation
-# shared by q_sim_timeseries' probe and scoring branches; memoized with
-# the same (session, corpus) discipline as timeseries.hourly_base so
-# repeated calls (oracle sweeps, bench reps) reuse one cache entry.
-# session.evict_caches clears it (the _CACHE_OWNERSHIP contract in
-# functions/dedup.py).
-_TS_PROFILE_CACHE: dict[tuple[int, str], tuple[SparkSession, DataFrame]] = {}
-
 
 def _ts_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ONE full-data pass of the activity-similarity search: raw
@@ -624,31 +615,33 @@ def _ts_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpersisted, Catalyst planned the full scan→agg→pivot chain TWICE
     (PLANS.md r8 captured both chains).  At 100 TB that is the
     difference between one corpus pass and two.  Pinned by
-    tests/test_plans.py::test_sim_timeseries_reads_events_once."""
-    key = (id(spark), os.path.abspath(sf_dir))
-    hit = _TS_PROFILE_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    ev = load_table(spark, sf_dir, "events")
-    cnt = ev.groupBy("user_id", F.hour("ts").alias("h")).agg(
-        F.count(F.lit(1)).cast("double").alias("c")
-    )
-    prof = (
-        cnt.groupBy("user_id")
-        .pivot("h", list(range(24)))
-        .sum("c")
-        .na.fill(0.0)
-    )
-    vec = F.array(*[F.col(f"`{h}`") for h in range(24)])
-    prof = prof.select(
-        "user_id",
-        vec.alias("v"),
-        F.sqrt(
-            F.aggregate(vec, F.lit(0.0), lambda acc, x: acc + x * x)
-        ).alias("l2"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _TS_PROFILE_CACHE[key] = (spark, prof)
-    return prof
+    tests/test_plans.py::test_sim_timeseries_reads_events_once.
+
+    Memoized per (session, corpus) (``session.memo``) so repeated calls
+    (oracle sweeps, bench reps) reuse one cache entry; evict_caches
+    clears it."""
+
+    def build() -> DataFrame:
+        ev = load_table(spark, sf_dir, "events")
+        cnt = ev.groupBy("user_id", F.hour("ts").alias("h")).agg(
+            F.count(F.lit(1)).cast("double").alias("c")
+        )
+        prof = (
+            cnt.groupBy("user_id")
+            .pivot("h", list(range(24)))
+            .sum("c")
+            .na.fill(0.0)
+        )
+        vec = F.array(*[F.col(f"`{h}`") for h in range(24)])
+        return prof.select(
+            "user_id",
+            vec.alias("v"),
+            F.sqrt(
+                F.aggregate(vec, F.lit(0.0), lambda acc, x: acc + x * x)
+            ).alias("l2"),
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+
+    return memo("ts_profiles", spark, sf_dir, build)
 
 
 @query(

@@ -19,7 +19,8 @@ interpolation windows) runs on relations bounded by the calendar, not
 the data; the grid cross join carries an explicitly broadcast,
 enum-sized type list.  Both keys in this module share that aggregated
 relation through ONE persisted, memoized table (``hourly_base``, the
-same (session, corpus)-keyed discipline as dedup's pair cache):
+``session.memo``, the (session, corpus)-keyed memo dedup's verified
+pairs also use):
 deriving the bounds/types/grid from raw events would re-execute the
 differently-pruned scan+agg subtree once per consumer — three full
 event-log passes per query at warehouse scale — and running rollup
@@ -30,8 +31,6 @@ streaming twin, already covered by ``q_stream_tumbling``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -39,11 +38,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
-
-# (session, corpus) -> persisted hourly aggregate, shared by both keys
-# below; memoized so repeated calls (oracle sweeps, scale probes) reuse
-# one cache entry instead of leaking a fresh persist per invocation.
-_HOURLY_CACHE: dict[tuple[int, str], tuple[SparkSession, DataFrame]] = {}
+from ..session import memo
 
 
 def hourly_base(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -53,29 +48,31 @@ def hourly_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-sum mean (interpolation; ``avg(double)`` is partial-agg-
     order dependent, and a 1-ulp drift at a round-half boundary broke
     sf0.1 cross-engine parity — decimal summation is order-independent
-    and bit-identical in both engines)."""
-    key = (id(spark), os.path.abspath(sf_dir))
-    hit = _HOURLY_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    ev = load_table(spark, sf_dir, "events").select(
-        F.date_trunc("hour", "ts").alias("h"), "event_type", "value"
-    )
-    base = (
-        ev.groupBy("h", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("v"),
+    and bit-identical in both engines).
+
+    Persisted and memoized per (session, corpus) (``session.memo``), so
+    repeated calls (oracle sweeps, scale probes) reuse one cache entry
+    instead of leaking a fresh persist per invocation."""
+
+    def build() -> DataFrame:
+        ev = load_table(spark, sf_dir, "events").select(
+            F.date_trunc("hour", "ts").alias("h"), "event_type", "value"
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    _HOURLY_CACHE[key] = (spark, base)
-    return base
+        return (
+            ev.groupBy("h", "event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.round(F.sum("value"), 6).alias("sum_value"),
+                F.round(
+                    F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
+                    / F.count(F.lit(1)),
+                    6,
+                ).alias("v"),
+            )
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+
+    return memo("hourly_base", spark, sf_dir, build)
 
 
 def _calendar_grid(base: DataFrame) -> DataFrame:

@@ -16,10 +16,28 @@ Settings are chosen for correctness-at-scale first:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def _default_driver_memory() -> str:
+    """Half of physical memory, capped at 16g. Local mode runs the whole
+    engine in the driver JVM, and a heap sized past the box lets the
+    kernel OOM-killer take the JVM (and every test after it) instead of
+    the GC reclaiming. Callers needing another size pass
+    ``extra_conf={"spark.driver.memory": ...}``."""
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    half_mb = int(line.split()[1]) // 2048  # kB -> MB / 2
+                    return f"{min(half_mb, 16 * 1024)}m"
+    except OSError:
+        pass
+    return "16g"
 
 
 def get_spark(
@@ -101,7 +119,7 @@ def get_spark(
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
         # bucketed saveAsTable targets (co-located join tests) land in /tmp
@@ -117,23 +135,47 @@ def get_spark(
     return spark
 
 
+# (name, session id, corpus) -> (session, DataFrame): the staged
+# relations several queries share (verified pairs, hourly rollup,
+# activity profiles, stratified sample), each built and persisted once
+# per (session, corpus). The session OBJECT is stored and identity-
+# checked, so an entry left by a stopped session whose id() was reused
+# is never served to a new one.
+_MEMO: dict[tuple[str, int, str], tuple[SparkSession, DataFrame]] = {}
+
+
+def memo(
+    name: str,
+    spark: SparkSession,
+    sf_dir: str,
+    build: Callable[[], DataFrame],
+) -> DataFrame:
+    """The ``name`` relation for (spark, sf_dir): ``build()`` on first
+    use, the same DataFrame object afterwards until evict_caches."""
+    key = (name, id(spark), os.path.abspath(sf_dir))
+    hit = _MEMO.get(key)
+    if hit is not None and hit[0] is spark:
+        return hit[1]
+    out = build()
+    _MEMO[key] = (spark, out)
+    return out
+
+
 def evict_caches(spark) -> None:
     """Cold-measurement hygiene for timing harnesses (bench.py,
     tools/scale_probe.py): drop every cached relation AND every
-    module-level (session, corpus) memo dict in one call.
+    (session, corpus) memo in one call.
 
     The two MUST move together — ``clearCache`` unpersists the memoized
     DataFrames' storage, and a later memo hit on an unpersisted
     DataFrame silently recomputes WITHOUT re-caching for any later
-    consumer (ADVICE r6 / bench.py discussion). Any new module memo
-    belongs in this list, not in per-harness copies.
+    consumer (ADVICE r6 / bench.py discussion). A new memoized relation
+    goes through :func:`memo`, which this clears; the q_join_dpp layout
+    memo holds a written directory, not a DataFrame, so it is cleared
+    here by name.
     """
-    from .functions import dedup, sampling
-    from .operators import behavior, joins, timeseries
+    from .operators import joins
 
-    dedup._PAIR_CACHE.clear()
-    timeseries._HOURLY_CACHE.clear()
-    behavior._TS_PROFILE_CACHE.clear()
+    _MEMO.clear()
     joins._DPP_LAYOUT_CACHE.clear()
-    sampling._STRAT_CACHE.clear()
     spark.catalog.clearCache()

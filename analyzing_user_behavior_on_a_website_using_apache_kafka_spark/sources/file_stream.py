@@ -17,6 +17,23 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import ensure_reader_conf, normalize, table_path
 
+# r17 (guide §5, VERDICT r16 item 5): stateful operators take their
+# partition count from spark.sql.shuffle.partitions at FIRST batch
+# (AQE is disabled in stateful workloads, so the session's 32 is
+# literal), and every stateful op then opens+commits one RocksDB
+# instance PER partition PER micro-batch. For the local one-batch
+# AvailableNow harness over KB-scale state that fan-out is pure
+# fixed cost: interleaved same-session A/B at sf0.1 measured
+# stream-stream joins 7.7-8.1 s @32 → 3.6 s @8 → 3.6-4.2 s @4
+# (2.2×), dedup 2.7→1.7, session 2.0→1.4, complete_agg 2.2→1.6 @4.
+# LOCAL-RIG value; on a real cluster SIZE IT UP to state volume ÷
+# target per-instance state (the count is frozen into the checkpoint
+# for the query's lifetime — pick for peak state, e.g. hundreds at
+# 100 TB rates). run_stream scopes it to the streaming query only:
+# StreamExecution clones the session at start(), and the conf is
+# restored before the sink read-back, so batch plans never see it.
+STREAM_SHUFFLE_PARTITIONS = 4
+
 
 def _stream_dir(sf_dir: str, name: str) -> str:
     """FileStreamSource requires a *directory* to monitor, but the fixtures
@@ -111,25 +128,6 @@ def run_stream(
         "RocksDBStateStoreProvider",
     )
     write_mode = "overwrite" if output_mode == "complete" else "append"
-    # r17 (guide §5, VERDICT r16 item 5): stateful operators take their
-    # partition count from spark.sql.shuffle.partitions at FIRST batch
-    # (AQE is disabled in stateful workloads, so the session's 32 is
-    # literal), and every stateful op then opens+commits one RocksDB
-    # instance PER partition PER micro-batch. For the local one-batch
-    # AvailableNow harness over KB-scale state that fan-out is pure
-    # fixed cost: interleaved same-session A/B at sf0.1 measured
-    # stream-stream joins 7.7-8.1 s @32 → 3.6 s @8 → 3.6-4.2 s @4
-    # (2.2×), dedup 2.7→1.7, session 2.0→1.4, complete_agg 2.2→1.6 @4.
-    # LOCAL-RIG default 4, env-parameterized like the scan knobs; on a
-    # real cluster SIZE IT UP to state volume ÷ target per-instance
-    # state (the count is frozen into the checkpoint for the query's
-    # lifetime — pick for peak state, e.g. hundreds at 100 TB rates).
-    # Scoped to the streaming query only: StreamExecution clones the
-    # session at start(), and the conf is restored before the sink
-    # read-back below, so batch plans never see it.
-    stream_parts = os.environ.get(
-        "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "4"
-    )
 
     def one_run():
         name = f"sink_{uuid.uuid4().hex[:12]}"
@@ -148,7 +146,9 @@ def run_stream(
             batch_df.write.mode(write_mode).parquet(out_dir)
 
         prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", stream_parts)
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS)
+        )
         try:
             q = (
                 stream_df.writeStream.foreachBatch(write_batch)

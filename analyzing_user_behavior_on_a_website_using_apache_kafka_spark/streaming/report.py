@@ -46,15 +46,23 @@ def report_model(histograms: DataFrame) -> dict[str, Any]:
     (``:144-162``), then services sorted (deterministic stand-in for
     dict order), each with its age/city/gender histograms
     (``:165-201``); ``home`` excluded, empty histograms skipped
-    (``:169-183``).
+    (``:169-183``). A NULL dimension value (a user registered without a
+    gender, FIXTURES.md §B) stays ``None`` and sorts after every
+    non-NULL value of its histogram.
     """
     overall = {
         r.service: r.total_clicks
         for r in overall_clicks(histograms).collect()
     }
     dims = dimension_histograms(histograms).collect()
-    per_service: dict[str, dict[str, list[tuple[str, int, float]]]] = {}
-    for r in sorted(dims, key=lambda r: (r.service, r.dimension, r.value)):
+    per_service: dict[
+        str, dict[str, list[tuple[str | None, int, float]]]
+    ] = {}
+
+    def order(r):  # NULLs last: None does not compare with str
+        return (r.service, r.dimension, r.value is None, r.value or "")
+
+    for r in sorted(dims, key=order):
         per_service.setdefault(r.service, {}).setdefault(
             r.dimension, []
         ).append((r.value, r.cnt, r.share))
@@ -138,6 +146,12 @@ def _legend_svg(
     return "".join(rows)
 
 
+def _value_label(value: str | None, count: int) -> str:
+    """Legend label of one histogram slice, ``{value} ({count})``; a
+    NULL value reads ``brak`` ("none")."""
+    return f"{'brak' if value is None else value} ({count})"
+
+
 def _esc(s: str) -> str:
     return (
         s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
@@ -183,7 +197,7 @@ def render_svg(model: dict[str, Any], path: str | None = None) -> str:
         for dim in sorted(svc["histograms"]):
             rows = svc["histograms"][dim]
             total = sum(c for _, c, _ in rows) or 1
-            entries = [(f"{v} ({c})", c / total) for v, c, _ in rows]
+            entries = [(_value_label(v, c), c / total) for v, c, _ in rows]
             sections.append(
                 f'<text x="40" y="{y:.1f}" font-size="13">{_esc(dim)}</text>'
             )
@@ -305,7 +319,7 @@ def render_pdf(model: dict[str, Any], path: str | None = None) -> bytes:
                 y = _PAGE_H - 60
             rows = svc["histograms"][dim]
             total = sum(c for _, c, _ in rows) or 1
-            entries = [(f"{v} ({c})", c / total) for v, c, _ in rows]
+            entries = [(_value_label(v, c), c / total) for v, c, _ in rows]
             page.text(40, y, dim, size=13)
             y -= 10
             _pie_pdf(page, 140, y - _PIE_R, entries)

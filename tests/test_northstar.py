@@ -1544,10 +1544,11 @@ def test_lsh_oracle_planes_match_plane_coeff():
 
 def test_ivf_tie_margins_dominate_float_error(sf_dir):
     """Cross-engine dist² parity guard (ADVICE r4): the oracle sums the
-    64 squared-difference terms in GROUP BY (unordered) order, Spark in
-    a sequential fold. A nearest-centroid or probe-routing decision
-    could only flip between engines if a rank-adjacent dist² gap were
-    comparable to summation-order error (~64·eps·|dist²| ≈ 2e-14 here).
+    64 squared-difference terms in GROUP BY (unordered) order, Spark's
+    Arrow-matmul routing in numpy's array-sum order. A nearest-centroid
+    or probe-routing decision could only flip between engines if a
+    rank-adjacent dist² gap were comparable to summation-order error
+    (~64·eps·|dist²| ≈ 2e-14 here).
     Re-measures the margins on the CURRENT fixture so a regenerated
     dataset that lands a genuine near-tie fails loudly instead of
     producing a mystery driver hash-mismatch."""
@@ -1681,9 +1682,12 @@ def test_pq_adc_recall_vs_exact_euclidean(spark, sf_dir):
 
 
 def test_pair_cache_keyed_per_corpus(spark):
-    """The verified-pairs memo (dedup._PAIR_CACHE) must key on the
-    corpus path: serving one sf_dir's persisted pairs to another would
+    """The verified-pairs memo (session.memo) must key on the corpus
+    path: serving one sf_dir's persisted pairs to another would
     silently corrupt every downstream dedup result."""
+    from analyzing_user_behavior_on_a_website_using_apache_kafka_spark import (
+        session,
+    )
     from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.functions.dedup import (
         ngram_jaccard_pairs,
     )
@@ -1693,6 +1697,13 @@ def test_pair_cache_keyed_per_corpus(spark):
     a2 = ngram_jaccard_pairs(spark, "/root/testdata/sf0.001")
     assert a is a2, "same corpus must hit the memo"
     assert a is not b, "different corpora must never share a memo entry"
+    entries = {
+        k[2]: v[1]
+        for k, v in session._MEMO.items()
+        if k[0] == "ngram_jaccard_pairs" and v[0] is spark
+    }
+    assert entries["/root/testdata/sf0.001"] is a
+    assert entries["/root/testdata/sf0.01"] is b
     # and the cached plans genuinely read different inputs
     pa = a.sparkSession._jvm.PythonSQLUtils.explainString(
         a._jdf.queryExecution(), "simple"
@@ -1705,8 +1716,9 @@ def test_pair_cache_keyed_per_corpus(spark):
 
 def test_semantic_tie_margins_dominate_float_error(sf_dir):
     """q_dedup_semantic twin of the IVF margin guard. Two cross-engine
-    decisions exist: nearest-centroid assignment (dist² fold vs GROUP BY
-    sum — same centroid rule as IVF) and the cosine-vs-τ threshold.
+    decisions exist: nearest-centroid assignment (numpy dist² sum vs
+    GROUP BY sum — same centroid rule as IVF) and the cosine-vs-τ
+    threshold.
     Re-measured on the CURRENT fixture so a regenerated dataset that
     lands a genuine near-tie fails loudly here, not as a driver
     hash-mismatch."""
@@ -1944,61 +1956,6 @@ def test_framedup_constructed_pairs():
     assert m13 == 0
     assert len(by_doc[1]) == 3
     assert len(by_doc[3]) == 1  # 250 bytes -> 3 frames, only 0 sampled
-
-
-def test_ivf_matmul_routing_matches_fold_path(spark, sf_dir):
-    """The Arrow-matmul centroid routing (default ON since r6, see
-    _matmul_routing_enabled) must reproduce the interpreted fold path's
-    q_sim_ivf output EXACTLY: same cells, same probe routing, same
-    final top-k. The measured assignment / routing margins
-    (test_ivf_tie_margins_dominate_float_error) are what guarantees
-    summation-order differences cannot flip a decision; this test pins
-    the end-to-end consequence — and keeps the
-    spark.aub.vectorRouting=fold escape hatch honest."""
-    from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.functions import (
-        similarity,
-    )
-
-    def run():
-        return sorted(
-            tuple(r)
-            for r in similarity.q_sim_ivf(spark, sf_dir).collect()
-        )
-
-    assert similarity._matmul_routing_enabled(spark)  # default ON
-    matmul = run()
-    spark.conf.set("spark.aub.vectorRouting", "fold")
-    try:
-        assert not similarity._matmul_routing_enabled(spark)
-        fold = run()
-    finally:
-        spark.conf.unset("spark.aub.vectorRouting")
-    assert fold == matmul
-
-
-def test_semantic_matmul_routing_matches_fold_path(spark, sf_dir):
-    """q_dedup_semantic shares q_sim_ivf's matmul centroid routing
-    (default ON) — same end-to-end output-identity requirement (see
-    test_ivf_matmul_routing_matches_fold_path)."""
-    from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.functions import (
-        dedup,
-        similarity,
-    )
-
-    def run():
-        return sorted(
-            tuple(r)
-            for r in dedup.q_dedup_semantic(spark, sf_dir).collect()
-        )
-
-    assert similarity._matmul_routing_enabled(spark)  # default ON
-    matmul = run()
-    spark.conf.set("spark.aub.vectorRouting", "fold")
-    try:
-        fold = run()
-    finally:
-        spark.conf.unset("spark.aub.vectorRouting")
-    assert fold == matmul
 
 
 def test_sim_timeseries_topk_shape_and_bounds(spark, sf_dir):

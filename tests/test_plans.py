@@ -765,6 +765,9 @@ def test_memoized_caches_reuse_and_evict(spark, sf_dir):
     together with the storage — a memo hit on an unpersisted DataFrame
     would silently recompute without re-caching (the bench.py
     discussion), so the two must always move together."""
+    from analyzing_user_behavior_on_a_website_using_apache_kafka_spark import (
+        session,
+    )
     from analyzing_user_behavior_on_a_website_using_apache_kafka_spark.operators import (
         joins,
         timeseries,
@@ -787,11 +790,11 @@ def test_memoized_caches_reuse_and_evict(spark, sf_dir):
     # reuse one cache pair instead of stacking fresh entries per call
     s1 = sampling.q_sample_stratified(spark, sf_dir)
     assert sampling.q_sample_stratified(spark, sf_dir) is s1
-    n_strat = len(sampling._STRAT_CACHE)
+    n_memo = len(session._MEMO)
     sampling.q_sample_stratified(spark, sf_dir)
-    assert len(sampling._STRAT_CACHE) == n_strat
+    assert len(session._MEMO) == n_memo
     evict_caches(spark)
-    assert not sampling._STRAT_CACHE
+    assert not session._MEMO
     b2 = timeseries.hourly_base(spark, sf_dir)
     assert b2 is not b1
     assert b2.storageLevel.useMemory

@@ -48,6 +48,33 @@ def test_report_model_service_sections(histograms):
     assert set(services["gitlab"]) == {"age", "city", "gender"}
 
 
+def test_report_null_dimension_value(spark):
+    """A user registered without a gender (FIXTURES.md §B) yields a NULL
+    histogram value: the model keeps it as None, sorted after the
+    non-NULL values, and both renderers label it instead of raising."""
+    import xml.dom.minidom
+
+    users = spark.createDataFrame(
+        USERS + [(4, "Di", "di@x.pl", 41, "Sopot", None)],
+        "user_id long, name string, email string, age int, "
+        "city string, gender string",
+    )
+    clicks = spark.createDataFrame(
+        CLICKS + [(4, "gitlab"), (4, "gitlab")], "user_id long, service string"
+    )
+    model = report.report_model(
+        clickstream.topic_histograms(clickstream.fan_out_messages(clicks, users))
+    )
+    services = {s["service"]: s["histograms"] for s in model["services"]}
+    gender = services["gitlab"]["gender"]
+    assert [v for v, _, _ in gender] == ["Kobieta", "Mężczyzna", None]
+    assert gender[-1][1] == 2
+    svg = report.render_svg(model)
+    xml.dom.minidom.parseString(svg)
+    assert "brak (2)" in svg
+    assert rb"brak \(2\)" in report.render_pdf(model)
+
+
 def test_report_stream_incremental(spark, histograms, sf_dir, tmp_path):
     """The 60 s loop as foreachBatch: AvailableNow over a file stream of
     the messages must produce the identical model as batch."""

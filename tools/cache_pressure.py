@@ -31,13 +31,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # session.evict_caches if it adds a memo dict.
 PERSISTING_KEYS: tuple[str, ...] = (
     "q_dedup_near",            # minhash signatures + salted band table (r16)
-    "q_dedup_ngram_jaccard",   # jaccard prefix postings (+ _PAIR_CACHE)
+    "q_dedup_ngram_jaccard",   # jaccard prefix postings (+ pairs memo)
     "q_dedup_containment",     # containment ordered tokens
     "q_dedup_editdist",        # location-prefix postings
     "q_dedup_simhash",         # simhash signatures + salted band table (r16)
     "q_dedup_embed_cosine",    # LSH buckets + scored half-pairs
     "q_dedup_semantic",        # centroid assignment
-    "q_dedup_clusters",        # verified-pair memo (_PAIR_CACHE)
+    "q_dedup_clusters",        # verified-pair memo (session.memo)
     "q_time_rollup",           # O(hours×types) hourly base memo
     "q_time_interpolate",      # same hourly base (shared memo entry)
     "q_sim_timeseries",        # O(users×24) profile memo

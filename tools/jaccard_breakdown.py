@@ -12,9 +12,9 @@ The pipeline has four cost centers that one wall number conflates:
 
 This probe times the CUMULATIVE sub-plans cold (evict before each),
 so stage cost = successive difference, median-of-N. The sub-plans are
-rebuilt INLINE with the same code path as functions.dedup —
-equivalence is guarded by comparing the final sub-plan's output hash
-with the real registered query's output hash in the same session.
+the production plan's own stages (dedup.jaccard_join_stages, whose
+last stage is what prefix_filtered_jaccard_join returns), so there is
+no second copy of the plan to drift.
 
 Usage: python tools/jaccard_breakdown.py [--reps 3]
 """
@@ -26,7 +26,6 @@ import json
 import os
 import sys
 import time
-from fractions import Fraction
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -56,95 +55,6 @@ def _median(xs):
     return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
 
 
-def _subplans(docs, threshold):
-    """Rebuild (prefixes, cand, final) exactly as
-    dedup.prefix_filtered_jaccard_join does — keep in sync; the hash
-    guard below fails loudly on drift."""
-    from pyspark import StorageLevel
-
-    t = Fraction(str(threshold))
-    tok = docs.select(
-        "doc_id", F.array_distinct(F.split("text", " ")).alias("words")
-    )
-    words_ex = tok.select("doc_id", F.explode("words").alias("token"))
-    freq = words_ex.groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
-    ordered = (
-        words_ex.join(freq, "token")
-        .groupBy("doc_id")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("freq", "token"))).alias(
-                "wf"
-            )
-        )
-    )
-    n = F.size("wf")
-    ceil_tn = F.floor(
-        (n * F.lit(t.numerator) + F.lit(t.denominator - 1))
-        / F.lit(t.denominator)
-    )
-    p = (n - ceil_tn + 1).cast("int")
-    prefixes = ordered.select(
-        "doc_id",
-        F.size("wf").alias("nt"),
-        F.posexplode(
-            F.slice(F.transform("wf", lambda s: s["token"]), F.lit(1), p)
-        ).alias("pos0", "token"),
-    ).select(
-        "doc_id", "nt", (F.col("pos0") + 1).alias("pos"), "token"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    len_ok = F.least(F.col("pa.nt"), F.col("pb.nt")) * F.lit(
-        t.denominator
-    ) >= F.lit(t.numerator) * F.greatest(F.col("pa.nt"), F.col("pb.nt"))
-    overlap_ub = F.least(F.col("pa.pos"), F.col("pb.pos")) + F.least(
-        F.col("pa.nt") - F.col("pa.pos"), F.col("pb.nt") - F.col("pb.pos")
-    )
-    pos_ok = overlap_ub * F.lit(t.denominator + t.numerator) >= F.lit(
-        t.numerator
-    ) * (F.col("pa.nt") + F.col("pb.nt"))
-    cand = (
-        prefixes.alias("pa")
-        .join(
-            prefixes.alias("pb"),
-            (F.col("pa.token") == F.col("pb.token"))
-            & (F.col("pa.doc_id") < F.col("pb.doc_id"))
-            & len_ok
-            & pos_ok,
-        )
-        .select(
-            F.col("pa.doc_id").alias("doc_a"),
-            F.col("pb.doc_id").alias("doc_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    a = tok.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("words").alias("wa"),
-        F.size("words").alias("na"),
-    )
-    b = tok.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("words").alias("wb"),
-        F.size("words").alias("nb"),
-    )
-    inter = F.size(F.array_intersect("wa", "wb"))
-    survivors = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select("doc_a", "doc_b", "na", "nb", inter.alias("inter"))
-        .filter(
-            F.col("inter") * F.lit(t.denominator + t.numerator)
-            >= F.lit(t.numerator) * (F.col("na") + F.col("nb"))
-        )
-    )
-    jac = F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
-    )
-    final = survivors.select(
-        "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
-    )
-    return prefixes, cand, final
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--reps", type=int, default=3)
@@ -156,18 +66,7 @@ def main() -> None:
 
     spark = get_spark("jaccard_breakdown")
     docs = load_table(spark, args.sf_dir, "documents")
-    prefixes, cand, final = _subplans(docs, dedup._JACCARD_T)
-
-    # drift guard: inline rebuild must hash-match the registered query
-    evict_caches(spark)
-    h_real = _consume(dedup.q_dedup_ngram_jaccard(spark, args.sf_dir))
-    evict_caches(spark)
-    prefixes.unpersist()
-    h_inline = _consume(final)
-    if h_real != h_inline:
-        raise SystemExit(
-            f"DRIFT: inline rebuild hash {h_inline} != real {h_real}"
-        )
+    prefixes, cand, final = dedup.jaccard_join_stages(docs)
 
     stages = {"prefixes": prefixes, "candidates": cand, "full": final}
     counts = {}
@@ -175,12 +74,14 @@ def main() -> None:
     # warm-up pass
     for nm, df in stages.items():
         evict_caches(spark)
-        prefixes.unpersist()
+        prefixes.unpersist(blocking=True)
         _consume(df)
     for _ in range(args.reps):
         for nm, df in stages.items():
             evict_caches(spark)
-            prefixes.unpersist()  # evict_caches only clears catalog cache
+            # blocking: a rep must not start while cached blocks are
+            # still resident
+            prefixes.unpersist(blocking=True)
             spark.sparkContext.setJobDescription(f"breakdown:{nm}")
             t0 = time.time()
             _consume(df)
